@@ -116,13 +116,18 @@ class Warehouse:
     def table_exists(self, name: str) -> bool:
         return os.path.isdir(self._path(name))
 
+    def table_names(self) -> list[str]:
+        """Table names, sorted. A ``NAME._tmp`` directory is a write in
+        progress (upsert/update/delete stage there, then rename), not a
+        table."""
+        return [
+            d for d in sorted(os.listdir(self.root))
+            if os.path.isdir(os.path.join(self.root, d)) and not d.endswith("._tmp")
+        ]
+
     def list_tables(self) -> list[tuple[str, int]]:
         """A4: (name, doc count) like `_cat/indices`."""
-        out = []
-        for d in sorted(os.listdir(self.root)):
-            if os.path.isdir(os.path.join(self.root, d)):
-                out.append((d, self.table(d).count()))
-        return out
+        return [(d, self.table(d).count()) for d in self.table_names()]
 
     # ------------------------------------------------------------ aliases
     _ALIASES_FILE = ".aliases.json"
@@ -205,10 +210,8 @@ class Warehouse:
         status, doc count, size on disk (real bytes, where the
         reference renders N/A), file count, and a schema summary."""
         out = []
-        for d in sorted(os.listdir(self.root)):
+        for d in self.table_names():
             p = os.path.join(self.root, d)
-            if not os.path.isdir(p):
-                continue
             size = files = 0
             for root, _, names in os.walk(p):
                 for n in names:
@@ -368,7 +371,10 @@ class Warehouse:
         rule). A key with no stored doc raises (ES
         document_missing_exception) unless ``upsert=True``
         (doc_as_upsert: the partial doc inserts, absent columns NULL).
-        Returns the number of incoming rows applied.
+        Returns the number of incoming rows applied. A batch that
+        repeats a key raises: a DataFrame has no row order, so there is
+        no "last" patch to keep, and the join would fan the stored doc
+        out into one row per patch.
 
         Plan: one key-equi join of the store against the (small)
         update batch + per-column coalesce-by-hit — the Iceberg
@@ -387,7 +393,16 @@ class Warehouse:
             raise ValueError(f"unknown columns in partial update: {extra}")
         if key not in df.columns:
             raise ValueError(f"partial update needs the {key!r} column")
-        n_inc = df.count()
+        n_inc, n_keyed, n_keys = df.agg(
+            F.count(F.lit(1)), F.count(key), F.countDistinct(key)
+        ).first()
+        if n_keyed != n_keys:
+            dups = [
+                r[key] for r in
+                df.groupBy(key).count().filter("count > 1").orderBy(key)
+                .limit(5).collect()
+            ]
+            raise ValueError(f"duplicate keys in partial update batch: {dups}")
         if not upsert:
             missing = df.select(key).join(
                 stored.select(key), key, "left_anti"

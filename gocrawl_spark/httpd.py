@@ -17,25 +17,37 @@ module (search.py), on stdlib ``http.server`` — no new dependencies:
   rate limit (429), CORS echo + OPTIONS preflight 204, and the
   reference's security headers on success.
 
-The server is a thin driver-side façade: each request plans one Spark
-job over the warehouse/crawl tables. At scale the hot path is the same
-`match_topk` plan the CLI uses — precomputed df/idf index tables keep
-per-query work to one broadcast join (search.py module doc).
+``POST /search`` runs no Spark job: it is served from an in-memory
+match index (MatchIndex: term dictionary + CSR postings) that one Spark
+job builds when the backend loads an index, with the same analyzer and
+the same scores, order and total as `search.match_topk` plus the
+score > 0 count. A warehouse-backed index is rebuilt when a publish
+replaces its table, and the new snapshot is swapped in whole.
+``/search/dsl``, ``/msearch``, ``/search/rank_eval``, ``/mget``,
+``/percolate``, ``/termvectors``, ``/cdx`` and ``/metrics`` stay on
+Spark plans over the snapshot's DataFrame.
 """
 
 from __future__ import annotations
 
 import json
+import logging
+import os
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import NamedTuple
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gocrawl_spark import search
 
 DEFAULT_SEARCH_SIZE = 10  # cmd/search/search.go:24
+
+_log = logging.getLogger(__name__)
 
 _SECURITY_HEADERS = {
     "X-Content-Type-Options": "nosniff",
@@ -61,21 +73,163 @@ def _plain(v):
     return str(v)
 
 
+def _dir_version(path: str) -> "tuple[int, int] | None":
+    """Version token of a warehouse table directory. Every Warehouse
+    write replaces the directory (write ``NAME._tmp``, then rename), so
+    (inode, mtime) changes on each publish; None while it is absent."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns
+
+
+class MatchIndex:
+    """Immutable in-memory ``match`` index over one table snapshot —
+    the inverted index ES answers ``POST /search`` from. Docs are held
+    sorted by id (so a doc ordinal orders like its id), with the text
+    kept for the response; a term dictionary maps each analyzed term to
+    a code; CSR postings list (doc ordinal, tf) per term code."""
+
+    def __init__(self, ids: list, texts: list, terms: "dict[str, int]",
+                 indptr: np.ndarray, docs: np.ndarray, tfs: np.ndarray):
+        self.ids = ids
+        self.texts = texts
+        self.terms = terms
+        self.indptr = indptr
+        self.docs = docs
+        self.tfs = tfs
+
+    @classmethod
+    def build(cls, df: DataFrame, text_col: str) -> "MatchIndex":
+        """One Spark job: the JVM analyzer (search.tokens) tokenizes,
+        Arrow brings (id, text, tokens) back; the dictionary and the
+        postings are built with pyarrow/numpy in this process."""
+        tbl = df.select(
+            F.col("id"), F.col(text_col).alias("_text"),
+            search.tokens(text_col).alias("_toks"),
+        ).toArrow()
+        # Spark's ``id ASC``: nulls first, strings by UTF-8 bytes
+        tbl = tbl.take(pc.sort_indices(
+            tbl, [("id", "ascending")], null_placement="at_start"))
+        n = max(tbl.num_rows, 1)
+        toks = tbl["_toks"].combine_chunks()
+        doc = pc.list_parent_indices(toks).to_numpy().astype(np.int64)
+        enc = pc.dictionary_encode(pc.list_flatten(toks))
+        code = enc.indices.to_numpy().astype(np.int64)
+        # one (term, doc) key per posting, sorted by term then doc
+        key, tfs = np.unique(code * n + doc, return_counts=True)
+        n_terms = len(enc.dictionary)
+        indptr = np.zeros(n_terms + 1, np.int64)
+        np.cumsum(np.bincount(key // n, minlength=n_terms), out=indptr[1:])
+        return cls(
+            tbl["id"].to_pylist(), tbl["_text"].to_pylist(),
+            {t: i for i, t in enumerate(enc.dictionary.to_pylist())},
+            indptr, key % n, tfs,
+        )
+
+    def search(self, query: str, size: int) -> tuple[list[dict], int]:
+        """search.match_topk + the score > 0 count: score = Σ tf over
+        the analyzed query terms (repeats count), hits by (score desc,
+        id asc), total = every doc with a nonzero score."""
+        scores = np.zeros(len(self.ids), np.int64)
+        for t in search.analyze_query(query):
+            c = self.terms.get(t)
+            if c is not None:
+                lo, hi = self.indptr[c], self.indptr[c + 1]
+                scores[self.docs[lo:hi]] += self.tfs[lo:hi]
+        hit = np.flatnonzero(scores)
+        top = hit[np.lexsort((hit, -scores[hit]))[:size]]
+        results = [
+            {"id": self.ids[d], "score": float(scores[d]), "content": self.texts[d]}
+            for d in top
+        ]
+        return results, int(hit.size)
+
+
+class _Snapshot(NamedTuple):
+    df: DataFrame
+    text_col: str
+    match: "MatchIndex | None"  # None: the table has no id or no text column
+
+    @classmethod
+    def of(cls, df: DataFrame, text_col: str) -> "_Snapshot":
+        matchable = {"id", text_col} <= set(df.columns)
+        return cls(df, text_col, MatchIndex.build(df, text_col) if matchable else None)
+
+
 class SearchBackend:
-    """index name → (DataFrame, text column). The reference's
-    SearchManager.Search runs an ES ``match{content}`` query and
-    Count the same query (api.go:114-141); here that is match_topk +
-    a score>0 count over the same TF expression."""
+    """index name → an immutable snapshot (``tables``): the table's
+    DataFrame, its text column and its MatchIndex. ``search`` is the
+    reference's SearchManager.Search — an ES ``match{content}`` query
+    plus a Count of the same query (api.go:114-141) — answered from the
+    MatchIndex with no Spark job. The DSL, rank_eval, mget, percolate
+    and termvectors endpoints run Spark plans over the snapshot's
+    DataFrame. A table without an ``id`` or a text column is served to
+    those endpoints only; ``/search`` on it fails. A warehouse-backed
+    backend checks the table directory's version on every request; when
+    a publish has replaced the table, a new snapshot is built on the
+    side and swapped in, so no request sees a half-loaded index."""
 
     def __init__(
         self,
-        tables: "dict[str, tuple[DataFrame, str]]",
+        tables: "dict[str, tuple[DataFrame, str]] | None" = None,
         cdx: "DataFrame | None" = None,
         metrics: "DataFrame | None" = None,
+        warehouse=None,
     ):
-        self.tables = tables
         self.cdx = cdx
         self.metrics_df = metrics
+        self._warehouse = warehouse
+        self._reload = threading.Lock()
+        # warehouse only: index name → the directory version last loaded
+        # or tried, so a table the build cannot read is tried once, not
+        # on every request, until a publish replaces it again
+        self._seen: "dict[str, tuple[int, int] | None]" = {}
+        self.tables = {
+            name: _Snapshot.of(df, col) for name, (df, col) in (tables or {}).items()
+        }
+        if warehouse is not None:
+            for name in warehouse.table_names():
+                # stat before the read: a publish in between only
+                # causes one extra reload, never a missed one
+                self._seen[name] = _dir_version(warehouse._path(name))
+                self.tables[name] = self._load(name)
+
+    def _load(self, name: str) -> _Snapshot:
+        df = self._warehouse.table(name)
+        return _Snapshot.of(df, "body" if "body" in df.columns else "content")
+
+    def _snapshot(self, index: str, wait: bool = True) -> _Snapshot:
+        """The index's current snapshot, reloaded first if a publish has
+        replaced its table. ``wait=False`` (``/search``, whose snapshot
+        is all in memory) answers from the current snapshot while
+        another request reloads; the Spark endpoints wait, since the old
+        DataFrame's files are gone."""
+        snap = self.tables.get(index)
+        if snap is None:
+            raise KeyError(index)
+        if self._warehouse is None:
+            return snap
+        version = _dir_version(self._warehouse._path(index))
+        # absent = mid-publish (between the old dir's removal and the
+        # new one's rename): the snapshot in memory is still complete
+        if version in (self._seen[index], None):
+            return snap
+        if not self._reload.acquire(blocking=wait):
+            return snap
+        try:
+            if version != self._seen[index]:
+                self._seen[index] = version
+                self.tables[index] = self._load(index)
+        except Exception:
+            # e.g. replaced again while loading (the rename changes the
+            # version, so the next request retries) or a table the build
+            # cannot read: keep serving the last complete snapshot
+            _log.exception("reloading index %s failed", index)
+        finally:
+            self._reload.release()
+        return self.tables[index]
 
     def metrics_summary(self) -> dict:
         """The reference's metrics surface
@@ -123,25 +277,10 @@ class SearchBackend:
         }
 
     def search(self, index: str, query: str, size: int) -> tuple[list[dict], int]:
-        if index not in self.tables:
-            raise KeyError(index)
-        df, text_col = self.tables[index]
-        hits = search.match_topk(df, query, text_col=text_col, id_col="id", k=size)
-        rows = (
-            hits.join(df.select("id", text_col), "id")
-            .orderBy(hits["score"].desc(), hits["id"].asc())
-            .collect()
-        )
-        results = [
-            {"id": r["id"], "score": r["score"], "content": r[text_col]} for r in rows
-        ]
-        # total = all matching docs, not the page size (api.go:134-141)
-        total = (
-            search.match_scores(df, query, text_col=text_col, id_col="id")
-            .filter("score > 0")
-            .count()
-        )
-        return results, total
+        snap = self._snapshot(index, wait=False)
+        if snap.match is None:
+            raise ValueError(f"index {index} has no id or no {snap.text_col} column")
+        return snap.match.search(query, size)
 
     def search_dsl(self, index: str, body: dict) -> dict:
         """Full ES ``_search`` request over a table — the storage
@@ -150,9 +289,7 @@ class SearchBackend:
         query (whole bool-leaf surface) + post_filter + sort +
         search_after keyset paging + aggs (global scope included).
         Response mirrors ES's shape flattened to row dicts."""
-        if index not in self.tables:
-            raise KeyError(index)
-        df, _text_col = self.tables[index]
+        df, _text_col = self._snapshot(index)[:2]
         out = search.es_search(df, body)
         resp = {
             "hits": [r.asDict() for r in out["hits"].collect()],
@@ -169,9 +306,7 @@ class SearchBackend:
         are scored in ONE corpus pass (rankeval.rank_eval); ratings
         come from the request body, or fall back to the deterministic
         md5 judgment pool when omitted."""
-        if index not in self.tables:
-            raise KeyError(index)
-        df, text_col = self.tables[index]
+        df, text_col = self._snapshot(index)[:2]
         from gocrawl_spark import rankeval as rq
 
         reqs: list[tuple[str, str]] = []
@@ -230,9 +365,7 @@ class SearchBackend:
         (never one query per id), per-id found/missing in request
         order — the bulk twin of the reference's GetDocument
         (storage.go:139-158)."""
-        if index not in self.tables:
-            raise KeyError(index)
-        df, _ = self.tables[index]
+        df, _ = self._snapshot(index)[:2]
         rows = df.filter(F.col("id").isin(list(ids))).collect()
         found = {r["id"]: _plain(r.asDict(recursive=True)) for r in rows}
         return [
@@ -245,9 +378,7 @@ class SearchBackend:
         request body evaluated against every document of the table in
         ONE corpus pass (search.percolate). Body: {"queries": [{"id",
         "query", "operator"?}], "size"?}."""
-        if index not in self.tables:
-            raise KeyError(index)
-        df, text_col = self.tables[index]
+        df, text_col = self._snapshot(index)[:2]
         qs = [
             (str(q["id"]), str(q["query"]), str(q.get("operator", "or")))
             for q in body.get("queries") or []
@@ -271,9 +402,7 @@ class SearchBackend:
         """ES ``_termvectors`` with term_statistics: per-term in-doc
         frequency plus corpus doc_freq/ttf for the requested ids, all
         ids served from one pass (search.termvectors)."""
-        if index not in self.tables:
-            raise KeyError(index)
-        df, text_col = self.tables[index]
+        df, text_col = self._snapshot(index)[:2]
         rows = (
             search.termvectors(df, list(ids), text_col=text_col, id_col="id")
             .orderBy("id", "term")
@@ -330,12 +459,7 @@ class SearchBackend:
     def from_warehouse(cls, spark, warehouse_dir: str) -> "SearchBackend":
         from gocrawl_spark.catalog import Warehouse
 
-        wh = Warehouse(spark, warehouse_dir)
-        tables = {}
-        for name, _ in wh.list_tables():
-            df = wh.table(name)
-            tables[name] = (df, "body" if "body" in df.columns else "content")
-        return cls(tables)
+        return cls(warehouse=Warehouse(spark, warehouse_dir))
 
 
 class _RateLimiter:

@@ -1749,8 +1749,9 @@ def es_search(df: DataFrame, body: dict, id_col: str = "id") -> dict:
 
     # knn section: dense-vector retrieval (knn_topk) — alone, hits =
     # the vector top-k; next to a query, scores SUM over the union of
-    # both hit sets (ES's pre-retriever combination rule). Aggs/total
-    # keep the query scope.
+    # both hit sets (ES's pre-retriever combination rule). total counts
+    # that union (the knn hits alone when there is no query); aggs keep
+    # the query scope.
     knn_spec = body.get("knn")
     if knn_spec is None:
         hits = (

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -117,7 +118,12 @@ def test_index_health_and_cat_indices(spark, wh):
     assert wh.get_index_health("docs") == "green"
     assert Warehouse.ingestion_status("green") == "Active"
     assert Warehouse.ingestion_status("red") == "Failed"
+    # a write in progress stages NAME._tmp before its rename: not a table
+    wh.table("docs").write.parquet(os.path.join(wh.root, "docs._tmp"))
+    assert wh.table_names() == ["articles", "docs"]
+    assert [n for n, _ in wh.list_tables()] == ["articles", "docs"]
     cat = {r["index"]: r for r in wh.cat_indices()}
+    assert sorted(cat) == ["articles", "docs"]
     assert cat["docs"]["status"] == "Active" and cat["docs"]["docs"] == 1
     assert cat["articles"]["status"] == "Degraded"
     assert cat["docs"]["size_bytes"] > 0 and cat["docs"]["files"] >= 1
@@ -241,6 +247,17 @@ def test_partial_document_update(spark, wh):
     wh.update("docs", patch_new, upsert=True)
     rows = {r["id"]: r for r in wh.table("docs").collect()}
     assert rows["d9"]["title"] == "T9" and rows["d9"]["lang"] is None
+
+    # a batch repeating a key has no defined "last" row (a DataFrame is
+    # unordered) and would fan the stored doc out: rejected, naming the
+    # keys, table untouched
+    dup = spark.createDataFrame(
+        [("d1", "a"), ("d1", "b"), ("d2", "c"), ("d2", "d")],
+        "id string, title string",
+    )
+    with pytest.raises(ValueError, match=r"duplicate keys.*\['d1', 'd2'\]"):
+        wh.update("docs", dup, upsert=True)
+    assert wh.count("docs") == 4
 
     # schema hygiene + alias routing
     with pytest.raises(ValueError, match="unknown columns"):

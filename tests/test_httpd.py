@@ -42,7 +42,7 @@ def _post(base, path, payload, headers=None):
         method="POST",
     )
     try:
-        with urllib.request.urlopen(req) as resp:
+        with urllib.request.urlopen(req, timeout=60) as resp:
             return resp.status, json.loads(resp.read()), dict(resp.headers)
     except urllib.error.HTTPError as e:
         return e.code, json.loads(e.read() or b"{}"), dict(e.headers)
@@ -119,14 +119,73 @@ def test_cors_preflight(server):
 
 
 def test_backend_from_warehouse(spark, tmp_path, corpus_df):
+    """A server started while a publish is staging NAME._tmp serves
+    only the complete tables. Loading a table runs two Spark jobs, the
+    parquet schema read and the index build, and no per-table count."""
     from gocrawl_spark.catalog import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.create_table("articles", corpus_df.schema)
     wh.upsert("articles", corpus_df, key="id")
-    backend = httpd.SearchBackend.from_warehouse(spark, str(tmp_path / "wh"))
+    corpus_df.write.parquet(str(tmp_path / "wh" / "pages._tmp"))
+    sc = spark.sparkContext
+    sc.setJobGroup("load-backend", "from_warehouse")
+    try:
+        backend = httpd.SearchBackend.from_warehouse(spark, str(tmp_path / "wh"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(backend.tables) == ["articles"]
+    assert len(sc.statusTracker().getJobIdsForGroup("load-backend")) == 2
     results, total = backend.search("articles", "spark", 10)
     assert total == 3 and [r["id"] for r in results] == ["a1", "a3", "a5"]
+
+
+def test_warehouse_unmatchable_index_and_failed_reload(spark, tmp_path, corpus_df, caplog):
+    """Indices without an id or a text column (`index create` with the
+    default mapping has no id; `events` has no body/content) do not keep
+    the server from starting: /search answers the other tables, the DSL
+    endpoint answers `events`, and only /search on those two fails. A
+    table replaced by one the build cannot read is tried once per
+    publish: the last complete snapshot keeps answering /search and the
+    next publish is picked up."""
+    import logging
+    import shutil
+
+    from gocrawl_spark.catalog import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.upsert("articles", corpus_df)
+    assert wh.create_index("logs")
+    assert wh.create_index("events", {"properties": {
+        "id": {"type": "keyword"}, "message": {"type": "text"}}})
+    srv = httpd.serve(httpd.SearchBackend.from_warehouse(spark, wh.root), port=0)
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    try:
+        code, body, _ = _post(base, "/search", {"query": "spark"})
+        assert code == 200 and body["total"] == 3
+        code, body, _ = _post(base, "/search/dsl", {
+            "index": "events", "query": {"match": {"message": "spark"}}})
+        assert code == 200 and body["total"] == 0
+        for index in ("logs", "events"):
+            assert _post(base, "/search", {"query": "spark", "index": index})[0] == 500
+
+        path = wh._path("articles")
+        shutil.rmtree(path)
+        spark.createDataFrame([("b1", ["spark"])], "id string, body array<string>") \
+            .write.parquet(path)
+        with caplog.at_level(logging.ERROR, logger=httpd.__name__):
+            for _ in range(3):
+                code, body, _ = _post(base, "/search", {"query": "spark"})
+                assert code == 200 and body["total"] == 3
+        assert [r.getMessage() for r in caplog.records] == [
+            "reloading index articles failed"]
+
+        wh.drop_table("articles")
+        wh.upsert("articles", corpus_df.filter("id != 'a5'"))
+        code, body, _ = _post(base, "/search", {"query": "spark"})
+        assert code == 200 and [r["id"] for r in body["results"]] == ["a1", "a3"]
+    finally:
+        srv.shutdown()
 
 
 def test_bad_field_types_return_400(server):
@@ -352,3 +411,127 @@ def test_metrics_endpoint(server, spark, corpus_df):
     assert got["rate_limited_requests"] == 1   # 15 popped − 13 − 1
     assert got["rounds"] == 2
     assert got["by_metric"]["fetched"] == 13
+
+
+_PARITY_ROWS = [
+    ("p3", "Spark SPARK spark’s Café ÜBER 42 x_y wi-fi O'Brien's"),
+    ("p1", "spark café 42 42 über"),
+    ("p0", "spark café"),
+    ("p4", None),
+    ("p2", "o'brien's other Wi-Fi; naïve ２０２４ spark’s"),
+    ("p5", "nothing to see"),
+]
+
+
+def test_search_parity_with_spark_match(spark):
+    """/search, served from the in-memory MatchIndex, answers exactly
+    what the Spark `match` plan answers: search.match_topk for the hits
+    and the score > 0 count of search.match_scores for the total, over
+    text with case, non-ASCII letters and digits, both apostrophes,
+    hyphens and underscores. Numbers reach the client as JSON numbers
+    (a numpy scalar would leak through json.dumps(default=str) as a
+    string)."""
+    from gocrawl_spark import search
+
+    df = spark.createDataFrame(_PARITY_ROWS, "id string, body string")
+    srv = httpd.serve(httpd.SearchBackend({"articles": (df, "body")}), port=0)
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    text = dict(_PARITY_ROWS)
+    queries = [
+        ("spark", 2),  # ties at score 1 break by id; page < hit count
+        ("spark spark café", 10),  # a repeated query term counts twice
+        ("SPARK’S o'brien's wi fi x_y", 10),
+        ("42 ２０２４ über naïve zzzz", 50),  # size > hit count
+        ("zzzz", 10),  # zero hits
+    ]
+    try:
+        for q, size in queries:
+            code, body, _ = _post(base, "/search", {"query": q, "size": size})
+            assert code == 200
+            want = search.match_topk(df, q, text_col="body", k=size).collect()
+            total = (search.match_scores(df, q, text_col="body")
+                     .filter("score > 0").count())
+            assert [(r["id"], r["score"]) for r in body["results"]] == [
+                (r["id"], r["score"]) for r in want
+            ], q
+            assert type(body["total"]) is int and body["total"] == total, q
+            for r in body["results"]:
+                assert type(r["score"]) is float and r["content"] == text[r["id"]]
+        code, body, _ = _post(base, "/search", {"query": "!!!"})
+        assert (code, body) == (200, {"results": [], "total": 0})
+    finally:
+        srv.shutdown()
+
+
+def test_live_republish_is_picked_up_whole(spark, tmp_path):
+    """A publish into the served warehouse replaces the table
+    directory. The backend notices (one stat per request), builds the
+    new snapshot on the side and swaps it in: /search sees the added
+    and the changed doc, /search/dsl reads the new table instead of
+    failing on the deleted files, and while the publish runs (8 clients
+    keep querying throughout) every response is the old snapshot's
+    answer or the new one's — never an error, never a mix."""
+    import sys
+    import threading
+    import time
+
+    from gocrawl_spark.catalog import Warehouse
+
+    old = [("d1", "spark crawler"), ("d2", "bloom filter"), ("d3", "spark bloom spark")]
+    new = [("d1", "spark crawler"), ("d2", "bloom filter spark spark spark"),
+           ("d3", "spark bloom spark"), ("d4", "spark")]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.upsert("articles", spark.createDataFrame(old, "id string, body string"))
+    srv = httpd.serve(httpd.SearchBackend.from_warehouse(spark, wh.root), port=0)
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+
+    def answer(rows, *scored):  # every hit fits one default-size page
+        text = dict(rows)
+        return {"results": [{"id": i, "score": sc, "content": text[i]}
+                            for i, sc in scored], "total": len(scored)}
+
+    want = {
+        "old": answer(old, ("d3", 2.0), ("d1", 1.0)),
+        "new": answer(new, ("d2", 3.0), ("d3", 2.0), ("d1", 1.0), ("d4", 1.0)),
+    }
+    try:
+        assert _post(base, "/search", {"query": "spark"})[1] == want["old"]
+        got, errors = [], []
+        published = threading.Event()
+
+        def client():
+            # at least 20 requests each, and on until the publish is done
+            n = 0
+            while n < 20 or not published.is_set():
+                n += 1
+                try:
+                    code, body, _ = _post(base, "/search", {"query": "spark"})
+                    got.append(body if code == 200 else code)
+                except Exception as e:  # a dropped connection is a failure too
+                    errors.append(repr(e))
+                time.sleep(0.02)
+
+        threads = [threading.Thread(target=client, daemon=True) for _ in range(8)]
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)  # interleave the handler threads finely
+        try:
+            for t in threads:
+                t.start()
+            wh.upsert("articles", spark.createDataFrame(
+                [("d2", new[1][1]), ("d4", "spark")], "id string, body string"))
+        finally:
+            # a failed publish must end the clients too, not leave them looping
+            published.set()
+            for t in threads:
+                t.join(timeout=120)
+            sys.setswitchinterval(switch)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors and len(got) >= 160
+        assert all(b in (want["old"], want["new"]) for b in got)
+        assert _post(base, "/search", {"query": "spark"})[1] == want["new"]
+        code, body, _ = _post(base, "/search/dsl", {
+            "query": {"match": {"body": "spark"}}, "sort": [{"id": "asc"}]})
+        assert code == 200 and body["total"] == 4
+        assert [h["id"] for h in body["hits"]] == ["d1", "d2", "d3", "d4"]
+    finally:
+        srv.shutdown()
