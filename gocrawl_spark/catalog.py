@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from gocrawl_spark import tableformat
 from gocrawl_spark.schema import ARTICLE, PAGE
 
 # Spark ↔ ES field-type correspondence for the S6 mapping surface
@@ -208,27 +209,35 @@ class Warehouse:
         """A4 detail (`_cat/indices` + the list-command rendering,
         cmd/index/list.go:47-130): per index — health, ingestion
         status, doc count, size on disk (real bytes, where the
-        reference renders N/A), file count, and a schema summary."""
+        reference renders N/A), file count, and a schema summary.
+        Everything comes from the data files' footers, with no Spark
+        job: a table whose footer cannot be read, or that has no data
+        file, is red."""
+        import pyarrow.parquet as pq
+
         out = []
         for d in self.table_names():
             p = os.path.join(self.root, d)
-            size = files = 0
+            size = 0
             for root, _, names in os.walk(p):
-                for n in names:
-                    if not n.startswith(("_", ".")):
-                        files += 1
-                    size += os.path.getsize(os.path.join(root, n))
-            health = self.get_index_health(d)
-            row = {
+                size += sum(os.path.getsize(os.path.join(root, n)) for n in names)
+            data = tableformat.data_files(p)
+            try:
+                docs = tableformat.record_count(p)
+                columns = len(pq.read_schema(data[0]).names)
+                health = "green" if docs else "yellow"
+            except Exception:
+                docs = columns = 0
+                health = "red"
+            out.append({
                 "index": d,
                 "health": health,
                 "status": self.ingestion_status(health),
-                "docs": self.table(d).count() if health != "red" else 0,
+                "docs": docs,
                 "size_bytes": size,
-                "files": files,
-                "columns": len(self.table(d).columns) if health != "red" else 0,
-            }
-            out.append(row)
+                "files": len(data),
+                "columns": columns,
+            })
         return out
 
     # -------------------------------------------------------- mappings (S6)

@@ -409,12 +409,13 @@ def pop_batch(frontier: DataFrame, budget_col: str = "budget", n_salts: int = 8)
 
 
 def pop_split(
-    frontier: DataFrame, budget_col: str = "budget", n_salts: int = 8
+    frontier: DataFrame, budget_col: str = "budget", n_salts: int = 8,
+    over: "tuple[DataFrame, int] | None" = None,
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
     """pop_batch that also returns the un-popped remainder.
 
-    Same two salted window passes, but both outcomes are derived from
-    the SAME cached rankings, so the caller never needs the
+    Same two salted window passes, but both outcomes are filters over
+    ONE cached ranking, so the caller never needs the
     O(frontier)-shuffle anti-join (frontier ∖ batch) to rebuild the
     next round's pending set — at 10^10-frontier scale that anti-join
     was a second full shuffle per round. Returns (batch, rest, cached);
@@ -430,47 +431,59 @@ def pop_split(
     the ranking: under-budget domains pass straight into the batch,
     and the salted two-stage window sorts just the hot domains' rows.
     Identical output to ranking everything — per-domain top-k is
-    independent across domains and identity for k ≥ n."""
-    counts = frontier.groupBy("domain").agg(
-        F.count("*").alias("_n"), F.min(budget_col).alias("_b")
-    )
-    # persist the (tiny, domain-only) hot list: it feeds BOTH the
-    # n_over count and the broadcast join — without the persist the
-    # un-cached frontier is scanned + aggregated twice per round
-    over = counts.filter(F.col("_n") > F.col("_b")).select("domain").persist()
-    n_over = over.count()
+    independent across domains and identity for k ≥ n.
+
+    ``over`` is (the over-budget domains, their number) when the caller
+    already has them (rounds.CrawlRun does, from the per-domain
+    aggregate it collects anyway); None finds them here."""
+    if over is None:
+        counts = frontier.groupBy("domain").agg(
+            F.count("*").alias("_n"), F.min(budget_col).alias("_b")
+        )
+        # persist the (tiny, domain-only) hot list: it feeds BOTH the
+        # n_over count and the broadcast join — without the persist the
+        # un-cached frontier is scanned + aggregated twice per round
+        hot_list = counts.filter(F.col("_n") > F.col("_b")).select("domain").persist()
+        over = hot_list, hot_list.count()
+    hot_list, n_over = over
     if n_over == 0:
-        over.unpersist()
+        hot_list.unpersist()
         return frontier, frontier.limit(0), []
     if n_over <= 1_000_000:
         # split: hot domains ranked, the rest admitted whole (the hot
         # list broadcasts — ~tens of MB worst case at the cap)
         tagged = frontier.join(
-            F.broadcast(over.withColumn("_hot", F.lit(True))), "domain", "left"
+            F.broadcast(hot_list.withColumn("_hot", F.lit(True))), "domain", "left"
         ).persist()
         cold = tagged.filter(F.col("_hot").isNull()).drop("_hot")
         hot = tagged.filter(F.col("_hot").isNotNull()).drop("_hot")
-        cache = [tagged, over]
+        cache = [tagged, hot_list]
     else:
         # nearly every domain is hot (deep politeness-bound crawl):
         # skip the split, rank everything as before
-        over.unpersist()
+        hot_list.unpersist()
         cold = frontier.limit(0)
         hot = frontier
         cache = []
     stage1 = Window.partitionBy("domain", _salt(n_salts)).orderBy(*_order())
-    r1 = hot.withColumn("_r1", F.row_number().over(stage1)).persist()
-    dropped1 = r1.filter(F.col("_r1") > F.col(budget_col)).drop("_r1")
-    stage2 = Window.partitionBy("domain").orderBy(*_order())
-    r2 = (
-        r1.filter(F.col("_r1") <= F.col(budget_col))
-        .drop("_r1")
-        .withColumn("_r2", F.row_number().over(stage2))
+    r1 = hot.withColumn("_r1", F.row_number().over(stage1))
+    kept = F.col("_r1") <= F.col(budget_col)
+    # stage 2 ranks a domain's stage-1 survivors together; the rows
+    # stage 1 dropped stay spread over their salts and never pop
+    stage2 = Window.partitionBy(
+        "domain", F.when(kept, F.lit(-1)).otherwise(_salt(n_salts))
+    ).orderBy(*_order())
+    popped = kept & (F.row_number().over(stage2) <= F.col(budget_col))
+    # one cached ranking, every row flagged popped or not: batch and
+    # rest are filters over it
+    ranked = (
+        cold.withColumn("_pop", F.lit(True))
+        .unionByName(r1.withColumn("_pop", popped).drop("_r1"))
         .persist()
     )
-    batch = cold.unionByName(r2.filter(F.col("_r2") <= F.col(budget_col)).drop("_r2"))
-    rest = dropped1.unionByName(r2.filter(F.col("_r2") > F.col(budget_col)).drop("_r2"))
-    return batch, rest, cache + [r1, r2]
+    batch = ranked.filter(F.col("_pop")).drop("_pop")
+    rest = ranked.filter(~F.col("_pop")).drop("_pop")
+    return batch, rest, cache + [ranked]
 
 
 def apply_rules(frontier: DataFrame, rules: list[dict] | None) -> DataFrame:

@@ -31,16 +31,24 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+from pyspark.util import inheritable_thread_target
 
 from gocrawl_spark import frontier as fr
 from gocrawl_spark import tableformat, udfs
-from gocrawl_spark.schema import FRONTIER
+from gocrawl_spark.schema import FRONTIER, ROUND_METRICS
 
 SEQ_STRIDE = 1024  # > max links/page; keeps child seq a pure function
+
+# the metrics table as a Spark write of a local list records it: every
+# field nullable
+METRICS = StructType([StructField(f.name, f.dataType) for f in ROUND_METRICS.fields])
 
 
 @dataclass
@@ -629,7 +637,7 @@ class CrawlRun:
         p = os.path.join(_round_dir(self.run_dir, rnd - 1), "throttled")
         if not os.path.isdir(p):
             return None
-        return self.spark.read.parquet(p)
+        return self._parquet(p)
 
     def _budgeted(self, frontier_df: DataFrame, rnd: int = 0) -> DataFrame:
         """Attach the per-host round budget (P1/P2): global config unless
@@ -725,11 +733,53 @@ class CrawlRun:
         )
 
     # ---------------------------------------------------------------- io
+    def _path(self, rnd: int, name: str) -> str:
+        return os.path.join(_round_dir(self.run_dir, rnd), name)
+
     def _write(self, df: DataFrame, rnd: int, name: str) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(_round_dir(self.run_dir, rnd), name))
+        df.write.mode("overwrite").parquet(self._path(rnd, name))
+
+    def _parquet(self, *paths: str) -> DataFrame:
+        """Read tables this crawl wrote, with the schema their writer
+        recorded in the first footer: what Spark's schema inference
+        would return, without its job."""
+        return self.spark.read.schema(tableformat.spark_schema(paths[0])).parquet(*paths)
 
     def _read(self, rnd: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(_round_dir(self.run_dir, rnd), name))
+        return self._parquet(self._path(rnd, name))
+
+    def _write_rows(self, rnd: int, name: str, rows: list, schema: StructType) -> None:
+        """A round's small table (metrics, host_state), written by the
+        driver as one parquet file: a Spark write of a local list would
+        ship the rows through Python workers."""
+        tableformat.overwrite_table(self._path(rnd, name), rows, schema)
+
+    def _host_delta(self, budgeted: DataFrame, rnd: int) -> DataFrame:
+        """host_state delta (P1): per-domain fetch accounting of budgeted
+        frontier rows, plus ``_budget`` (the domain's round budget) and
+        ``_expand`` (any row below the depth bound). Readers aggregate
+        deltas into the cumulative token-bucket view (next_fetch_ts ≡
+        round boundary + delay — rounds ARE the clock)."""
+        cfg = self.cfg
+        host_delta = budgeted.groupBy("domain").agg(
+            F.count("*").alias("fetched_total"),
+            F.min("budget").alias("_budget"),
+            F.max(F.col("depth") < cfg.max_depth).alias("_expand"),
+        )
+        if self.host_policy is not None:
+            pol = self.host_policy.select("domain", "delay_ms", "parallelism")
+            host_delta = host_delta.join(F.broadcast(pol), "domain", "left")
+            host_delta = host_delta.withColumn(
+                "delay_ms", F.coalesce("delay_ms", F.lit(cfg.delay_ms).cast("long"))
+            ).withColumn("parallelism", F.coalesce("parallelism", F.lit(cfg.parallelism)))
+        else:
+            host_delta = host_delta.withColumn(
+                "delay_ms", F.lit(cfg.delay_ms).cast("long")
+            ).withColumn("parallelism", F.lit(cfg.parallelism))
+        return host_delta.withColumn("last_round", F.lit(rnd)).select(
+            "domain", "delay_ms", "parallelism", "fetched_total", "last_round",
+            "_budget", "_expand",
+        )
 
     # ------------------------------------------------------------- round
     def run_round(
@@ -755,16 +805,36 @@ class CrawlRun:
         if cfg.opic and rnd > 0:
             frontier_df = self._overlay_opic(frontier_df, rnd)
         budgeted = self._budgeted(frontier_df, rnd)
+        # one per-domain aggregate, collected (O(domains) rows), answers
+        # the round-control questions on the driver: which domains are
+        # over budget, how many URLs pop, and whether any popped row sits
+        # below the depth bound (when none does, no child can be
+        # admitted, so the fused UDF skips link discovery and the whole
+        # candidate chain below is bypassed). Its rows are the round's
+        # host_state delta, which the driver writes itself. Taken over
+        # the frontier first: when no domain is over budget the pop is
+        # the identity, and these rows are already the batch's.
         # batch and rest come from one cached ranking (no anti-join);
-        # batch feeds the fetch join, the seen update and the stats
-        # count, rest feeds the next frontier
-        batch, rest, pop_cache = fr.pop_split(budgeted, n_salts=cfg.n_salts)
-        batch = batch.drop("budget").persist()
+        # batch feeds the fetch join and the seen update, rest the next
+        # frontier. The identity pop hands back the frontier, uncached.
+        host_delta = self._host_delta(budgeted, rnd)
+        host_rows = host_delta.collect()
+        n_over = sum(r["fetched_total"] > r["_budget"] for r in host_rows)
+        over = host_delta.filter(F.col("fetched_total") > F.col("_budget")).select("domain")
+        batch, rest, pop_cache = fr.pop_split(budgeted, n_salts=cfg.n_salts, over=(over, n_over))
+        if n_over:
+            host_rows = self._host_delta(batch, rnd).collect()
+        else:
+            batch = batch.persist()
+        pop_cache.append(batch)
+        batch = batch.drop("budget")
         rest = rest.drop("budget")
-        n_popped = batch.count()
+        n_popped = sum(r["fetched_total"] for r in host_rows)
+        can_expand = any(r["_expand"] for r in host_rows)
         t["pop"] = time.perf_counter() - t0
 
         retry = None
+        n_retried = 0
         resp = None
         carry304 = None
         if cfg.fetch_mode == "http":
@@ -856,7 +926,7 @@ class CrawlRun:
                     .select([f.name for f in FRONTIER.fields])
                     .persist()
                 )
-                retry.count()
+                n_retried = retry.count()
         else:
             # fetch = corpus join (J2); AQE handles residual skew on url
             fetched = batch.join(self.corpus, "url", "inner")
@@ -870,69 +940,8 @@ class CrawlRun:
                     .select([f.name for f in FRONTIER.fields])
                     .persist()
                 )
-                retry.count()
+                n_retried = retry.count()
                 fetched = fetched.filter(F.col("attempt") >= F.col("fail_attempts"))
-        # the fused pandas UDF (the expensive stage) runs EXACTLY once:
-        # its output is committed directly as the round's `extracted`
-        # table, and every consumer (articles/pages views, candidate
-        # expansion, stats) re-reads that parquet with column pruning —
-        # no multi-GB persist, no duplicate text writes (articles/pages
-        # are projections of extracted, not copies)
-        # last-BFS-tier fast path, decided BEFORE extraction: when every
-        # popped row sits AT the depth bound no child can be admitted,
-        # so the fused UDF skips link discovery (kernel time + shipped
-        # bytes) and the whole candidate chain below is bypassed
-        can_expand = batch.filter(F.col("depth") < cfg.max_depth).limit(1).count() > 0
-        t0 = time.perf_counter()
-        extracted_out = self._extract(fetched, can_expand, rnd)
-        if carry304 is not None:
-            extracted_out = extracted_out.unionByName(carry304)
-        self._write(extracted_out, rnd, "extracted")
-        extracted = self._read(rnd, "extracted")
-        n_fetched = extracted.count()
-        t["fetch_extract"] = time.perf_counter() - t0
-
-
-        # persist candidates: filter_unseen's bloom split unions two
-        # branches over them, and the frontier write replays the chain —
-        # without this the link-resolution UDF + dedup window run 3-4×
-        t0 = time.perf_counter()
-        cand = None
-        if can_expand:
-            cand = self._apply_rank_priority(
-                self._gate_robots(expand_candidates(extracted, batch, cfg, rnd), rnd)
-            ).persist()
-            cand.count()
-        t["expand"] = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        if can_expand:
-            # below bloom_min_seen the pandas prefilter costs more than
-            # the exact anti-join saves; the cumulative filter is still
-            # maintained (deltas are O(batch)) so it's ready when the
-            # seen set grows past the threshold
-            has_filter = bloom is not None and (
-                isinstance(bloom, DataFrame) or bloom.shards
-            )
-            want_bloom = (
-                cfg.use_bloom
-                and has_filter
-                and (seen_size is None or seen_size >= cfg.bloom_min_seen)
-            )
-            # new candidates dodge: seen set, still-pending rest, this batch
-            pending = rest.select("url_hash").unionByName(batch.select("url_hash"))
-            new_rows = fr.filter_unseen(
-                cand,
-                seen,
-                bloom if want_bloom else None,
-                self.spark,
-                n_shards=cfg.bloom_shards,
-            ).join(pending, "url_hash", "left_anti")
-            frontier_next = rest.unionByName(new_rows)
-        else:
-            frontier_next = rest
-        if retry is not None:
-            frontier_next = frontier_next.unionByName(retry)
-        t["bloom"] = time.perf_counter() - t0
         # retried rows are NOT seen yet (they'll be popped again);
         # everything else popped this round — fetched, 404s, and
         # retries that exhausted max_retries — is
@@ -940,34 +949,7 @@ class CrawlRun:
         if retry is not None:
             seen_src = batch.join(retry.select("url_hash"), "url_hash", "left_anti")
         seen_delta = seen_src.select("url_hash", "url").withColumn("fetched_round", F.lit(rnd))
-        # host_state delta (P1): per-domain fetch accounting this round;
-        # readers aggregate deltas into the cumulative token-bucket view
-        # (next_fetch_ts ≡ round boundary + delay — rounds ARE the clock)
-        host_delta = batch.groupBy("domain").agg(F.count("*").alias("fetched_total"))
-        if self.host_policy is not None:
-            pol = self.host_policy.select("domain", "delay_ms", "parallelism")
-            host_delta = host_delta.join(F.broadcast(pol), "domain", "left")
-            host_delta = host_delta.withColumn(
-                "delay_ms", F.coalesce("delay_ms", F.lit(cfg.delay_ms).cast("long"))
-            ).withColumn("parallelism", F.coalesce("parallelism", F.lit(cfg.parallelism)))
-        else:
-            host_delta = host_delta.withColumn(
-                "delay_ms", F.lit(cfg.delay_ms).cast("long")
-            ).withColumn("parallelism", F.lit(cfg.parallelism))
-        host_delta = host_delta.withColumn("last_round", F.lit(rnd)).select(
-            "domain", "delay_ms", "parallelism", "fetched_total", "last_round"
-        )
 
-        # ---- commit snapshot (order matters: manifest last) ----
-        # seen is append-only: each round writes only its delta (the
-        # Iceberg-append analogue) — O(batch) IO per round, not O(total);
-        # readers union the deltas of committed rounds. The four writes
-        # are independent Spark jobs → submit concurrently (the inputs
-        # they share — batch/extracted/cand — are persisted above, so
-        # parallel jobs reuse, not recompute, them).
-        from concurrent.futures import ThreadPoolExecutor
-
-        t0 = time.perf_counter()
         # F7 incremental maintenance: the round's Bloom DELTA covers
         # exactly this round's seen delta — built with one applyInPandas
         # over the (persisted) batch and written straight to parquet as
@@ -1003,39 +985,118 @@ class CrawlRun:
                     seen_delta, n_shards=cfg.bloom_shards, m_bits=cfg.bloom_bits
                 )
             )
-        opic_delta = None
-        if cfg.opic:
-            grants = (
-                frontier_df.select(
-                    "url_hash", F.lit(1_000_000).cast("long").alias("delta_u")
-                )
-                if rnd == 0
-                else None
-            )
-            # retried (transient-failure) pops keep their cash: they
-            # distributed nothing this round and will pop again — the
-            # same popped-minus-retry rule the seen delta applies
-            opic_delta = self._opic_round_delta(seen_src, extracted, rnd, grants)
+        # ---- snapshot writes (order matters: commit last) ----
+        # seen is append-only: each round writes only its delta (the
+        # Iceberg-append analogue) — O(batch) IO per round, not O(total);
+        # readers union the deltas of committed rounds. The writes are
+        # independent Spark jobs → submit concurrently (the inputs they
+        # share — batch/extracted/cand — are persisted, so parallel jobs
+        # reuse, not recompute, them). The seen delta and its filter
+        # delta depend on the batch alone, so they start here and run
+        # alongside extraction and expansion. The pool's threads carry
+        # the caller's job group and local properties, so every job of
+        # the round is attributable to it
+        inherit = inheritable_thread_target(self.spark)
+        write = inherit(self._write)
         with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(self._write, frontier_next, rnd, "frontier"),
-                pool.submit(self._write, seen_delta, rnd, "seen"),
-                pool.submit(self._write, host_delta, rnd, "host_state"),
-            ]
-            if opic_delta is not None:
-                futs.append(pool.submit(self._write, opic_delta, rnd, "opic"))
+            futs = [pool.submit(write, seen_delta, rnd, "seen")]
             if bloom_delta_df is not None:
-                futs.append(
-                    pool.submit(self._write, bloom_delta_df, rnd, filter_table)
+                futs.append(pool.submit(write, bloom_delta_df, rnd, filter_table))
+            # the fused pandas UDF (the expensive stage) runs EXACTLY once:
+            # its output is committed directly as the round's `extracted`
+            # table, and every consumer (articles/pages views, candidate
+            # expansion, stats) re-reads that parquet with column pruning —
+            # no multi-GB persist, no duplicate text writes (articles/pages
+            # are projections of extracted, not copies). Row counts of the
+            # tables a round writes come from their footers
+            # (tableformat.record_count), never from a count job
+            t0 = time.perf_counter()
+            extracted_out = self._extract(fetched, can_expand, rnd)
+            if carry304 is not None:
+                extracted_out = extracted_out.unionByName(carry304)
+            self._write(extracted_out, rnd, "extracted")
+            extracted = self._read(rnd, "extracted")
+            n_fetched = tableformat.record_count(self._path(rnd, "extracted"))
+            t["fetch_extract"] = time.perf_counter() - t0
+
+            # persist candidates: filter_unseen's bloom split unions two
+            # branches over them, and the frontier write replays the chain —
+            # without this the link-resolution UDF + dedup window run 3-4×.
+            # A noop write materializes them without a count's extra jobs
+            t0 = time.perf_counter()
+            cand = None
+            if can_expand:
+                cand = self._apply_rank_priority(
+                    self._gate_robots(expand_candidates(extracted, batch, cfg, rnd), rnd)
+                ).persist()
+                cand.write.format("noop").mode("overwrite").save()
+            t["expand"] = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            if can_expand:
+                # below bloom_min_seen the pandas prefilter costs more than
+                # the exact anti-join saves; the cumulative filter is still
+                # maintained (deltas are O(batch)) so it's ready when the
+                # seen set grows past the threshold
+                has_filter = bloom is not None and (
+                    isinstance(bloom, DataFrame) or bloom.shards
                 )
+                want_bloom = (
+                    cfg.use_bloom
+                    and has_filter
+                    and (seen_size is None or seen_size >= cfg.bloom_min_seen)
+                )
+                # new candidates dodge: seen set, still-pending rest, this batch
+                pending = rest.select("url_hash").unionByName(batch.select("url_hash"))
+                new_rows = fr.filter_unseen(
+                    cand,
+                    seen,
+                    bloom if want_bloom else None,
+                    self.spark,
+                    n_shards=cfg.bloom_shards,
+                ).join(pending, "url_hash", "left_anti")
+                frontier_next = rest.unionByName(new_rows)
+            else:
+                frontier_next = rest
+            if retry is not None:
+                frontier_next = frontier_next.unionByName(retry)
+            t["bloom"] = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            opic_delta = None
+            if cfg.opic:
+                grants = (
+                    frontier_df.select(
+                        "url_hash", F.lit(1_000_000).cast("long").alias("delta_u")
+                    )
+                    if rnd == 0
+                    else None
+                )
+                # retried (transient-failure) pops keep their cash: they
+                # distributed nothing this round and will pop again — the
+                # same popped-minus-retry rule the seen delta applies
+                opic_delta = self._opic_round_delta(seen_src, extracted, rnd, grants)
+            # one scan gives every per-round counter (V8's stats rollup);
+            # it reads the committed extracted table alongside the writes
+            cells = pool.submit(inherit(
+                extracted.groupBy("content_type", "article_valid", "skip_reason")
+                .count()
+                .collect
+            ))
+            futs.append(pool.submit(write, frontier_next, rnd, "frontier"))
+            if opic_delta is not None:
+                futs.append(pool.submit(write, opic_delta, rnd, "opic"))
             if resp is not None:
                 # F10: record followed redirects (request → landing URL)
                 redirects = resp.filter(
                     F.col("final_url") != F.col("url")
                 ).select("url", "final_url", "status")
-                futs.append(pool.submit(self._write, redirects, rnd, "redirects"))
+                futs.append(pool.submit(write, redirects, rnd, "redirects"))
+            self._write_rows(
+                rnd, "host_state", [r[:5] for r in host_rows],
+                StructType(host_delta.schema.fields[:5]),
+            )
             for f in futs:
                 f.result()
+            cells = cells.result()
         if self._seen_index is not None:
             # second O(batch) append into the bucketed index (the
             # snapshot delta above stays the commit-protocol source of
@@ -1045,12 +1106,6 @@ class CrawlRun:
         t["writes"] = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        # one scan gives every per-round counter (V8's stats rollup)
-        cells = (
-            extracted.groupBy("content_type", "article_valid", "skip_reason")
-            .count()
-            .collect()
-        )
         n_articles = sum(
             r["count"] for r in cells if r["content_type"] == "article" and r["article_valid"]
         )
@@ -1060,29 +1115,23 @@ class CrawlRun:
             "fetched": n_fetched,
             "articles": n_articles,
             "pages": sum(r["count"] for r in cells if r["content_type"] == "page"),
-            "frontier_next": self._read(rnd, "frontier").count(),
+            "frontier_next": tableformat.record_count(self._path(rnd, "frontier")),
             "rejected": {
                 r["skip_reason"]: r["count"]
                 for r in cells
                 if r["content_type"] == "article" and not r["article_valid"] and r["skip_reason"]
             },
-            "retried": retry.count() if retry is not None else 0,
+            "retried": n_retried,
         }
         t["stats"] = time.perf_counter() - t0
         stats["timings"] = {k: round(v, 2) for k, v in t.items()}
-        metrics_rows = [
+        self._write_rows(rnd, "metrics", [
             (rnd, k, int(v)) for k, v in stats.items() if isinstance(v, (int, float)) and k != "round"
-        ] + [(rnd, f"skip:{k}", int(v)) for k, v in stats["rejected"].items()]
-        self._write(
-            self.spark.createDataFrame(metrics_rows, "round int, metric string, value long"),
-            rnd,
-            "metrics",
-        )
+        ] + [(rnd, f"skip:{k}", int(v)) for k, v in stats["rejected"].items()], METRICS)
         # round commit: visibility flips only at the protocol's atomic
         # marker/pointer step (tableformat; Iceberg snapshot commit in
         # production — docs/ICEBERG.md)
         self.fmt.commit(rnd, {"stats": stats, "config": asdict(self.cfg)})
-        batch.unpersist()
         if cand is not None:
             cand.unpersist()
         if retry is not None:
@@ -1124,7 +1173,7 @@ class CrawlRun:
         if not parts:
             return self.spark.createDataFrame([], "url_hash string, cash_u long")
         return (
-            self.spark.read.parquet(*parts)
+            self._parquet(*parts)
             .groupBy("url_hash")
             .agg(F.sum("delta_u").alias("cash_u"))
         )
@@ -1220,7 +1269,7 @@ class CrawlRun:
         parts.extend(d for d in dirs if os.path.exists(d))
         if not parts:
             return self._empty_seen()
-        return self.spark.read.parquet(*parts)
+        return self._parquet(*parts)
 
     def _tag_bloom(self, bloom_df: DataFrame) -> DataFrame:
         """Stamp (shard, bits) rows with the config that built them —
@@ -1291,24 +1340,33 @@ class CrawlRun:
         parts = self._bloom_delta_paths(rnd)
         if parts is None:
             return None
+        out = fr.BloomFilter.empty(self.cfg.bloom_shards, self.cfg.bloom_bits)
+        for p in parts:
+            delta = self._bloom_delta(p)
+            if delta is None:
+                return None
+            out = out.merge(delta)
+        return out
+
+    def _bloom_delta(self, path: str) -> "fr.BloomFilter | None":
+        """One persisted Bloom delta, read by the driver straight from
+        its files (the broadcast path holds the whole filter on the
+        driver anyway). None when a row was built under another bloom
+        config — the same rule as :meth:`_bloom_rows_compatible`, so the
+        caller takes the full rebuild."""
         cfg = self.cfg
-        out = fr.BloomFilter.empty(cfg.bloom_shards, cfg.bloom_bits)
-        if not parts:
-            return out
-        # every row must match the CURRENT config (see
-        # _bloom_rows_compatible) — else fall back to the full rebuild
-        if not self._bloom_rows_compatible(
-            self.spark.read.option("mergeSchema", "true").parquet(*parts)
+        rows = [r for f in tableformat.data_files(path) for r in pq.read_table(f).to_pylist()]
+        if any(
+            len(r["bits"]) != cfg.bloom_bits // 8
+            or r["shard"] >= cfg.bloom_shards
+            or r.get("n_shards") not in (None, cfg.bloom_shards)
+            or r.get("m_bits") not in (None, cfg.bloom_bits)
+            for r in rows
         ):
             return None
-        for p in parts:
-            rows = self.spark.read.parquet(p).select("shard", "bits").collect()
-            out = out.merge(
-                fr.BloomFilter.from_rows(
-                    [(r["shard"], r["bits"]) for r in rows], cfg.bloom_shards, cfg.bloom_bits
-                )
-            )
-        return out
+        return fr.BloomFilter.from_rows(
+            [(r["shard"], r["bits"]) for r in rows], cfg.bloom_shards, cfg.bloom_bits
+        )
 
     @property
     def _bloom_sharded(self) -> bool:
@@ -1353,7 +1411,7 @@ class CrawlRun:
             fr.build_bloom_df(
                 self._seen_upto(rnd), n_shards=cfg.bloom_shards, m_bits=cfg.bloom_bits
             ).write.mode("overwrite").parquet(p)
-        return self.spark.read.parquet(p)
+        return self._parquet(p)
 
     # ---- cuckoo seen-filter persistence (seen_filter="cuckoo") ----
 
@@ -1431,7 +1489,7 @@ class CrawlRun:
                 n_shards=cfg.bloom_shards,
                 m_buckets=cfg.cuckoo_buckets,
             ).write.mode("overwrite").parquet(p)
-        return self.spark.read.parquet(p)
+        return self._parquet(p)
 
     def compact(self, keep_rounds: int = 2) -> int | None:
         """P7 maintenance (Iceberg snapshot-expiration analogue;
@@ -1458,7 +1516,7 @@ class CrawlRun:
         opic_parts = self._opic_delta_paths(upto)
         if opic_parts:
             (
-                self.spark.read.parquet(*opic_parts)
+                self._parquet(*opic_parts)
                 .groupBy("url_hash")
                 .agg(F.sum("delta_u").alias("delta_u"))
                 .write.parquet(os.path.join(tmp, "opic"))
@@ -1562,7 +1620,7 @@ class CrawlRun:
                 [],
                 "domain string, delay_ms long, parallelism int, fetched_total long, last_round int",
             )
-        return self.spark.read.parquet(*parts)
+        return self._parquet(*parts)
 
     def _sync_seen_index(self, last: "int | None") -> None:
         """Reconcile the bucketed seen index with the committed
@@ -1593,7 +1651,7 @@ class CrawlRun:
             idx.rebuild(self._seen_upto(last), last)
             return
         for r, p in zip(rounds, paths):
-            idx.append(self.spark.read.parquet(p), r)
+            idx.append(self._parquet(p), r)
 
     def _seen_for_filter(self, rnd: "int | None") -> DataFrame:
         """The seen set the anti-join backstop runs against: the
@@ -1618,10 +1676,21 @@ class CrawlRun:
         cuckoo = self.cfg.use_bloom and self.cfg.seen_filter == "cuckoo"
         sharded = self.cfg.use_bloom and not cuckoo and self._bloom_sharded
         last = self.fmt.last_committed() if resume else None
+        if resume and last is None:
+            # a lineage committed under another protocol would otherwise
+            # read as empty here and silently restart at round 0
+            written = tableformat.committed_protocols(self.run_dir)
+            if written:
+                raise ValueError(
+                    f"run_dir {self.run_dir} was committed with table_format"
+                    f" {' and '.join(map(repr, written))}; resuming it with"
+                    f" table_format={self.cfg.table_format!r} would restart at round 0"
+                )
         if self._seen_index is not None:
             self._sync_seen_index(last)
         if last is not None:
             frontier_df = self._read(last, "frontier")
+            pending = tableformat.record_count(self._path(last, "frontier"))
             seen = self._seen_for_filter(last)
             start = last + 1
             if cuckoo:
@@ -1646,6 +1715,7 @@ class CrawlRun:
             # run_round) — with a static robots table this yields the
             # same URL set as the reference's check-at-request-time
             frontier_df = self._apply_rank_priority(self._gate_robots(frontier_df))
+            pending = frontier_df.limit(1).count()  # later rounds report frontier_next
             seen = self._empty_seen()
             if cuckoo:
                 bloom = self.spark.createDataFrame(
@@ -1658,10 +1728,11 @@ class CrawlRun:
         history: list[dict] = []
         seen_size = None if last is not None else 0
         for rnd in range(start, start + self.cfg.max_rounds):
-            if frontier_df.limit(1).count() == 0:
+            if pending == 0:
                 break
             stats = self.run_round(rnd, frontier_df, seen, seen_size=seen_size, bloom=bloom)
             history.append(stats)
+            pending = stats["frontier_next"]
             if seen_size is not None:
                 seen_size += stats["popped"]
             # reload from the snapshot: truncates lineage, guarantees
@@ -1677,16 +1748,7 @@ class CrawlRun:
             elif bloom is not None:
                 # OR in ONLY this round's persisted delta — the
                 # cumulative filter never rescans the historical seen set
-                rows = self.spark.read.parquet(
-                    os.path.join(_round_dir(self.run_dir, rnd), "bloom")
-                ).collect()
-                bloom = bloom.merge(
-                    fr.BloomFilter.from_rows(
-                        [(r["shard"], r["bits"]) for r in rows],
-                        self.cfg.bloom_shards,
-                        self.cfg.bloom_bits,
-                    )
-                )
+                bloom = bloom.merge(self._bloom_delta(self._path(rnd, "bloom")))
         return history
 
     # ------------------------------------------------------------ readers

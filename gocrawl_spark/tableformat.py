@@ -27,7 +27,9 @@ Both protocols answer the only three questions the crawl driver asks:
 is round r committed, what is the last committed round, and commit
 round r with this payload. Everything else in rounds.py (delta-dir
 unions, compaction, bloom/cuckoo folds) is pure data-file layout and
-maps onto Iceberg data/manifest files unchanged.
+maps onto Iceberg data/manifest files unchanged. Row counts come from
+the data files' footers (:func:`record_count`), the analogue of the
+``record_count`` an Iceberg manifest keeps per data file.
 """
 
 from __future__ import annotations
@@ -194,3 +196,80 @@ def detect_last_committed(run_dir: str) -> int | None:
         if got is not None and (best is None or got > best):
             best = got
     return best
+
+
+def committed_protocols(run_dir: str) -> list[str]:
+    """Names of the protocols that hold at least one committed round."""
+    return [n for n, cls in PROTOCOLS.items() if cls(run_dir).last_committed() is not None]
+
+
+# ---------------------------------------------------------------------------
+# Data-file statistics. Iceberg answers a table's row count from the
+# ``record_count`` its manifests keep per data file, without a scan; a
+# parquet footer carries the same figure (``num_rows``), so the driver
+# reads it here instead of running a count job. Spark also records the
+# schema it wrote in every footer, which is what its own schema
+# inference reads back — taking it from the footer skips that job too.
+# ---------------------------------------------------------------------------
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def data_files(path: str) -> list[str]:
+    """A table directory's parquet data files, sorted. Names starting
+    with ``_`` or ``.`` (``_SUCCESS``, ``.crc``, ``_temporary``) are not
+    data, as for Spark's file index."""
+    out = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out.extend(os.path.join(root, n) for n in names if not n.startswith(("_", ".")))
+    return sorted(out)
+
+
+def record_count(path: str) -> int:
+    """Rows in a table directory, summed from its data files' footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in data_files(path))
+
+
+def spark_schema(path: str):
+    """The Spark schema recorded in the footer of a table directory's
+    first data file (Spark's writer and :func:`overwrite_table` both
+    record it)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = data_files(path)
+    if not files:
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    raw = (pq.read_metadata(files[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        raise ValueError(f"{files[0]} records no Spark schema")
+    return StructType.fromJson(json.loads(raw))
+
+
+def overwrite_table(path: str, rows: list, schema) -> None:
+    """Replace a table directory's contents with one parquet file of
+    ``rows`` (tuples in ``schema``'s field order), written by the driver
+    as ``mode("overwrite")`` would, without a Spark job. The footer
+    records ``schema`` the way Spark's writer does, so Spark reads the
+    file back with exactly that schema. The file is staged in
+    ``PATH._tmp`` and then moved in place of the directory, so a crash
+    never leaves a half-written file in it; a resumed round rewrites
+    the directory whole."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema).with_metadata({_SPARK_SCHEMA_KEY: schema.json()})
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=arrow)
+    tmp = path + "._tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    pq.write_table(table, os.path.join(tmp, "part-00000.snappy.parquet"))
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp, path)

@@ -131,6 +131,28 @@ def test_index_health_and_cat_indices(spark, wh):
         wh.get_index_health("nope")
 
 
+def test_cat_indices_from_footers(spark, wh):
+    """`_cat/indices` reads each table's data-file footers once and runs
+    no Spark job; a table whose footer cannot be read is red."""
+    wh.ensure_article_index("articles")
+    wh.upsert("docs", spark.createDataFrame([("a", "x"), ("b", "y")], "id string, body string"))
+    os.makedirs(os.path.join(wh.root, "broken"))
+    with open(os.path.join(wh.root, "broken", "part-00000.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    sc = spark.sparkContext
+    sc.setJobGroup("cat-indices", "cat_indices")
+    try:
+        cat = {r["index"]: r for r in wh.cat_indices()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cat-indices")) == 0
+    assert (cat["docs"]["health"], cat["docs"]["docs"], cat["docs"]["columns"]) == ("green", 2, 2)
+    assert (cat["articles"]["health"], cat["articles"]["docs"]) == ("yellow", 0)
+    assert cat["articles"]["columns"] == len(ARTICLE.fields)
+    assert (cat["broken"]["health"], cat["broken"]["status"]) == ("red", "Failed")
+    assert cat["broken"]["docs"] == cat["broken"]["columns"] == 0
+
+
 def test_export_jsonl(spark, wh, tmp_path):
     """JSONL export: the training-data delivery format — full dump and
     mapped projection ({"body": "text", "source": "url"})."""

@@ -10,12 +10,21 @@ lists and final URL-seen set at any parallelism.
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
+from dataclasses import replace
 
 import pytest
 
 from gocrawl_spark import synth
 from gocrawl_spark.canonicalize import absolutize, host_of, is_junk_link, is_valid_url
 from gocrawl_spark.rounds import SEQ_STRIDE, CrawlConfig, CrawlRun, last_committed_round
+
+# Spark jobs per round of test_round_job_budget's crawl: 37 or 38 for
+# its two rounds (AQE runs each shuffle, broadcast and cache stage as a
+# job of its own; two concurrent queries may both submit the batch's
+# cache stage)
+ROUND_JOBS = 19
 
 
 def sha(u: str) -> str:
@@ -191,6 +200,111 @@ def test_table_formats_equivalent_state(spark, sf_dir, tmp_path):
             sorted(r["id"] for r in run.articles().collect()),
         )
     assert finals["manifest"] == finals["snapshot"]
+
+
+def test_resume_under_other_table_format_raises(spark, sf_dir, tmp_path):
+    """A lineage committed under one protocol is invisible to the
+    other; resuming it under the other must fail and name the protocol
+    it was written with, not silently restart at round 0."""
+    corpus = synth.corpus_from_documents(spark, sf_dir)
+    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    seeds = synth.seed_urls(n, k=2)
+    run_dir = str(tmp_path / "run")
+    cfg = CrawlConfig(max_depth=0, round_wall_s=10.0, max_rounds=1, table_format="manifest")
+    CrawlRun(spark, corpus, seeds, run_dir, cfg).run()
+    assert last_committed_round(run_dir) == 0
+    other = CrawlRun(spark, corpus, seeds, run_dir, replace(cfg, table_format="snapshot"))
+    with pytest.raises(ValueError, match="'manifest'"):
+        other.run(resume=True)
+    assert not os.path.exists(os.path.join(run_dir, "rounds", "round=0001"))
+
+
+class Crash(Exception):
+    pass
+
+
+@pytest.fixture(scope="module")
+def committed_round0(spark, sf_dir, tmp_path_factory):
+    """A small depth-1 crawl with round 0 committed once; every
+    crash-point case resumes a copy of it."""
+    corpus = synth.corpus_from_documents(spark, sf_dir)
+    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    seeds = synth.seed_urls(n, k=4)
+    cfg = CrawlConfig(max_depth=1, round_wall_s=10.0, max_rounds=6,
+                      bloom_shards=8, bloom_bits=1 << 16, bloom_min_seen=0)
+    base = str(tmp_path_factory.mktemp("crash") / "round0")
+    CrawlRun(spark, corpus, seeds, base, replace(cfg, max_rounds=1)).run()
+    return corpus, seeds, n, cfg, base
+
+
+@pytest.mark.parametrize(
+    "kill_after", ["extracted", "frontier", "seen", "bloom", "host_state", "metrics", "commit"]
+)
+def test_crash_point_sweep_resumes_to_simulation(
+    spark, committed_round0, tmp_path, monkeypatch, kill_after
+):
+    """Kill round 1 right after each of its writes (Spark-written
+    tables, driver-written tables, the commit itself), then resume with
+    a fresh CrawlRun: the seen map must equal the reference simulation
+    and the metrics table must hold each committed round once."""
+    corpus, seeds, n, cfg, base = committed_round0
+    run_dir = str(tmp_path / "run")
+    shutil.copytree(base, run_dir)
+
+    def crash_after(method, at):  # args[at:at + 2] are (rnd, name)
+        def wrapped(self, *args):
+            method(self, *args)
+            if tuple(args[at:at + 2]) == (1, kill_after):
+                raise Crash(kill_after)
+        return wrapped
+
+    monkeypatch.setattr(CrawlRun, "_write", crash_after(CrawlRun._write, 1))
+    monkeypatch.setattr(CrawlRun, "_write_rows", crash_after(CrawlRun._write_rows, 0))
+    run = CrawlRun(spark, corpus, seeds, run_dir, cfg)
+    commit = run.fmt.commit
+
+    def crash_after_commit(rnd, payload):
+        commit(rnd, payload)
+        if (rnd, "commit") == (1, kill_after):
+            raise Crash("commit")
+
+    run.fmt.commit = crash_after_commit
+    with pytest.raises(Crash):
+        run.run(resume=True)
+    monkeypatch.undo()
+
+    resumed = CrawlRun(spark, corpus, seeds, run_dir, cfg)
+    history = resumed.run(resume=True)
+    # a round killed before its commit is redone; a committed one is not
+    assert [h["round"] for h in history if h["round"] == 1] == (
+        [] if kill_after == "commit" else [1]
+    )
+    got = {r["url_hash"]: r["fetched_round"] for r in resumed.seen_final().collect()}
+    assert got == simulate(seeds, n, cfg, cfg.max_rounds)[1]
+    last = last_committed_round(run_dir)
+    assert resumed.metrics().filter("metric = 'popped'").count() == last + 1
+
+
+def test_round_job_budget(spark, sf_dir, tmp_path):
+    """A round's bookkeeping stays off the Spark job path: counts come
+    from file footers and the per-domain aggregate, small tables are
+    written by the driver, reads take the footer schema. Every job of
+    a 2-round crawl, the concurrent writes included, runs in the
+    caller's job group."""
+    corpus = synth.corpus_from_documents(spark, sf_dir)
+    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    cfg = CrawlConfig(max_depth=2, round_wall_s=10.0, max_rounds=2,
+                      bloom_shards=8, bloom_bits=1 << 16, bloom_min_seen=0)
+    run = CrawlRun(spark, corpus, synth.seed_urls(n, k=8), str(tmp_path / "run"), cfg)
+    sc = spark.sparkContext
+    sc.setJobGroup("two-rounds", "round job budget")
+    try:
+        history = run.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(history) == 2
+    jobs = len(sc.statusTracker().getJobIdsForGroup("two-rounds"))
+    assert jobs / len(history) <= ROUND_JOBS, jobs
 
 
 def test_snapshot_log_expire_keeps_resume(spark, sf_dir, tmp_path):
